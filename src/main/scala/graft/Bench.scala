@@ -29,6 +29,77 @@ object Bench {
     */
   private def fence(): Unit = { System.gc(); System.gc() }
 
+  // Locale.ROOT: a comma-decimal default locale would emit invalid JSON
+  private def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** The artifact's `regressions` and `drift_vs_prior` fields, comparing
+    * this sweep's per-query bests against the prior artifact's text.
+    *
+    * Ship-time variance guard (r15 verdict task 7): twice (r12 outliers,
+    * r15 q_multimodal_frames) a loaded sample forced the NEXT round's judge
+    * to adjudicate a regression the sweep itself could have flagged. Every
+    * query whose new best exceeds 1.5× its prior best (with a 0.3 s
+    * absolute floor so millisecond queries don't flag on scheduler noise)
+    * is listed, so the artifact names what needs adjudication at ship time.
+    *
+    * Timings only compare at one CPU count: r21 flagged 38 "regressions"
+    * against an 8-CPU prior from a 32-CPU sweep. A prior whose `cpus`
+    * differs from `cpus`, or that records none, yields the single entry
+    * `{"prior_cpus":…,"now_cpus":…}` and a null drift instead of a
+    * comparison.
+    */
+  private[graft] def priorComparison(
+      prior: Option[String],
+      cpus: String,
+      results: Seq[(String, Double)]): (String, String) = {
+    val noDrift = ""","drift_vs_prior":null"""
+    val priorText = prior.getOrElse("")
+    val priorCpus = "\"cpus\":([0-9]+)".r.findFirstMatchIn(priorText).map(_.group(1))
+    if (prior.isDefined && !priorCpus.contains(cpus))
+      return (s""","regressions":[{"prior_cpus":${priorCpus.getOrElse("null")},"now_cpus":$cpus}]""",
+        noDrift)
+    val priorBest: Map[String, Double] = {
+      val start = priorText.indexOf("\"queries\":{")
+      if (start < 0) Map.empty
+      else {
+        val body = priorText.substring(start + 11, priorText.indexOf('}', start))
+        "\"([^\"]+)\":(-?[0-9.]+)".r.findAllMatchIn(body)
+          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      }
+    }
+    val regressions = results.collect {
+      case (k, v) if v >= 0 && priorBest.get(k).exists(p =>
+        p >= 0 && v > p * 1.5 && v - p > 0.3) =>
+        s"""{"query":"$k","prior":${fmt(priorBest(k))},"now":${fmt(v)}}"""
+    }
+    // a disabled guard must be visible: if the prior artifact EXISTS but the
+    // hand parse yielded nothing (format drift, nested values), say so in
+    // the artifact instead of shipping an indistinguishable-from-clean []
+    val priorUnreadable = prior.isDefined && priorBest.isEmpty
+    val regressionsJson =
+      if (priorUnreadable) ""","regressions":[{"prior_unreadable":true}]"""
+      else s""","regressions":[${regressions.mkString(",")}]"""
+    // Self-computing cross-round drift audit (r17 verdict task 1: the
+    // hand-computed SURVEY median didn't reproduce — 1.04 claimed, 1.135
+    // measured from the artifacts). The sweep now emits the number itself:
+    // median per-query ratio new-best / prior-best over the common q_*
+    // entries (flagship index-build entries excluded — the cold run is a
+    // single unrepeatable sample), plus the common-query count, so the
+    // narrative cites the artifact instead of prose arithmetic.
+    val ratios = results.collect {
+      case (k, v) if k.startsWith("q_") && v > 0 &&
+        priorBest.get(k).exists(_ > 0) => v / priorBest(k)
+    }.sorted
+    val driftJson =
+      if (priorUnreadable || ratios.isEmpty) noDrift
+      else {
+        val n = ratios.size
+        val med = if (n % 2 == 1) ratios(n / 2) else (ratios(n / 2 - 1) + ratios(n / 2)) / 2
+        s""","drift_vs_prior":{"median_ratio":${fmt(med)},"common_queries":$n}"""
+      }
+    (regressionsJson, driftJson)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -260,8 +331,6 @@ object Bench {
       timedBest2(name)(run(fn(spark, sfDir)))
     }
 
-    // Locale.ROOT: a comma-decimal default locale would emit invalid JSON
-    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val total = results.values.filter(_ >= 0).sum
     // Failures must be loud (round-10 lesson: 18 queries recorded -1.0 yet
@@ -277,58 +346,17 @@ object Bench {
     val samplesJson = samples.map { case (k, vs) =>
       "\"" + k + "\":[" + vs.map(fmt).mkString(",") + "]"
     }.mkString("{", ",", "}")
-    // ship-time variance guard (r15 verdict task 7): twice (r12 outliers,
-    // r15 q_multimodal_frames) a loaded sample forced the NEXT round's judge
-    // to adjudicate a regression the sweep itself could have flagged. Read
-    // the prior round's artifact BEFORE overwriting it and list every query
-    // whose new best exceeds 1.5× its prior best (with a 0.3 s absolute
-    // floor so millisecond queries don't flag on scheduler noise) — the
-    // artifact then names what needs adjudication at ship time.
-    val priorPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
-    val priorBest: Map[String, Double] = try {
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(priorPath)), "UTF-8")
-      val start = txt.indexOf("\"queries\":{")
-      if (start < 0) Map.empty
-      else {
-        val body = txt.substring(start + 11, txt.indexOf('}', start))
-        "\"([^\"]+)\":(-?[0-9.]+)".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
-    val regressions = results.toSeq.collect {
-      case (k, v) if v >= 0 && priorBest.get(k).exists(p =>
-        p >= 0 && v > p * 1.5 && v - p > 0.3) =>
-        s"""{"query":"$k","prior":${fmt(priorBest(k))},"now":${fmt(v)}}"""
+    // read the prior artifact BEFORE it is overwritten below; one that
+    // exists but cannot be read still counts as a prior (and is flagged)
+    val priorPath = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json"))
+    val prior = Option.when(java.nio.file.Files.exists(priorPath)) {
+      try new String(java.nio.file.Files.readAllBytes(priorPath), "UTF-8")
+      catch { case scala.util.control.NonFatal(_) => "" }
     }
-    // a disabled guard must be visible: if the prior artifact EXISTS but the
-    // hand parse yielded nothing (format drift, nested values), say so in
-    // the artifact instead of shipping an indistinguishable-from-clean []
-    val priorUnreadable =
-      priorBest.isEmpty && java.nio.file.Files.exists(java.nio.file.Paths.get(priorPath))
-    val regressionsJson =
-      if (priorUnreadable) ""","regressions":[{"prior_unreadable":true}]"""
-      else s""","regressions":[${regressions.mkString(",")}]"""
-    // Self-computing cross-round drift audit (r17 verdict task 1: the
-    // hand-computed SURVEY median didn't reproduce — 1.04 claimed, 1.135
-    // measured from the artifacts). The sweep now emits the number itself:
-    // median per-query ratio new-best / prior-best over the common q_*
-    // entries (flagship index-build entries excluded — the cold run is a
-    // single unrepeatable sample), plus the common-query count, so the
-    // narrative cites the artifact instead of prose arithmetic.
-    val ratios = results.toSeq.collect {
-      case (k, v) if k.startsWith("q_") && v > 0 &&
-        priorBest.get(k).exists(_ > 0) => v / priorBest(k)
-    }.sorted
-    val driftJson =
-      if (priorUnreadable || ratios.isEmpty) ""","drift_vs_prior":null"""
-      else {
-        val n = ratios.size
-        val med = if (n % 2 == 1) ratios(n / 2) else (ratios(n / 2 - 1) + ratios(n / 2)) / 2
-        s""","drift_vs_prior":{"median_ratio":${fmt(med)},"common_queries":$n}"""
-      }
+    val (regressionsJson, driftJson) = priorComparison(prior, cpus, results.toSeq)
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$failedJson$regressionsJson$driftJson,"samples":$samplesJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpus,"queries":$qs$failedJson$regressionsJson$driftJson,"samples":$samplesJson,"sf":"$sfDir"}"""
     println(full)
     // The driver's stdout-tail capture truncates the front of long lines
     // (rounds 3-4 lost the first ~45 queries of the map), so the complete

@@ -38,20 +38,24 @@ object Search {
     * the letter files back: reference checker/checker.sh:22-41), with the
     * query never touching the corpus.
     *
-    * Scale shape: the query terms' first letters become a
-    * `letter IN (...)` predicate the reader consumes at PLANNING time
-    * (`SupportsPushDownFilters` → partition pruning) — at most
-    * |distinct first letters| of the 26 files are opened or scheduled;
-    * the residual `word IN` filter cuts each streamed file to the query
-    * terms before the doc-keyed aggregation, and column pruning never
-    * parses what the query doesn't read. Identical output to [[andQuery]]
-    * over the live postings relation (same oracle SQL pins it).
+    * Scale shape: the `word IN` filter of [[andQuery]] reaches the
+    * `graft-letters` reader, which keeps only the files named by the
+    * terms' first letters (planning-time partition pruning) and splits
+    * ids only for the lines holding a query term; column pruning never
+    * parses what the query doesn't read. The pruned slice is then one
+    * partition: it holds at most |terms| rows, a posting list never spans
+    * rows in this format, and hash/range exchanges for the doc-keyed
+    * aggregation and the sort bought three extra job launches (one of them
+    * a range-sampling job) and no parallelism. The plan is one stage —
+    * scan, coalesce, generate, aggregate, sort — with no exchange.
+    * Identical output to [[andQuery]] over the live postings relation
+    * (same oracle SQL pins it).
     */
   def andQueryFromIndex(
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String,
       words: Seq[String]): DataFrame =
-    andQuery(letterIndexPostings(spark, indexDir, words), words)
+    andQuery(letterIndexPostings(spark, indexDir), words)
 
   /** Disjunctive retrieval from the on-disk letter index — same lifecycle
     * and pruning argument as [[andQueryFromIndex]].
@@ -60,22 +64,20 @@ object Search {
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String,
       words: Seq[String]): DataFrame =
-    orQuery(letterIndexPostings(spark, indexDir, words), words)
+    orQuery(letterIndexPostings(spark, indexDir), words)
 
-  /** (word, doc_ids) slice of an on-disk letter index, pruned at planning
-    * time to the query terms' first letters.
+  /** (word, doc_ids) slice of an on-disk letter index in one partition.
+    * The queries' `word IN` filter passes the coalesce into the scan, where
+    * the reader turns it into letter-file pruning and per-line skipping.
     */
   private def letterIndexPostings(
       spark: org.apache.spark.sql.SparkSession,
-      indexDir: String,
-      words: Seq[String]): DataFrame = {
-    val letters = cleanedTerms(words).map(_.substring(0, 1)).distinct
+      indexDir: String): DataFrame =
     spark.read
       .format("graft-letters")
       .load(indexDir)
-      .where(col("letter").isin(letters: _*))
       .select(col("word"), col("doc_ids"))
-  }
+      .coalesce(1)
 
   /** Conjunctive retrieval served DIRECTLY from the sharded postings
     * relation (word, shard, doc_ids) — [[InvertedIndex.postingsShardedRaw]],

@@ -5,6 +5,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -37,6 +38,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *     file-skipping a parquet reader gets from hive partitioning).
   *     Conjunctions intersect; fully-consumed filters are dropped from
   *     the residual so Spark doesn't re-evaluate them per row.
+  *   - **Word pushdown**: `word = 'v'` / `word IN (...)` are consumed the
+  *     same way. A word lives only in the file named by its first letter,
+  *     so the pushed words narrow the letter set at planning time too, and
+  *     inside a kept file the reader compares each line's word prefix and
+  *     splits ids only for the lines it keeps. Every line still passes the
+  *     malformed-line guard, kept or not.
   *   - **Column pruning**: `SupportsPushDownRequiredColumns` — a
   *     `select(word)` never materializes posting arrays (the wide
   *     column), line parsing skips the id split entirely.
@@ -86,35 +93,41 @@ class LetterIndexScanBuilder(dir: String)
 
   private var required: StructType = LetterIndexDataSource.Schema
   private var consumed: Array[Filter] = Array.empty
-  // None = no letter predicate (all 26); Some(set) = intersection of all
-  // pushed letter constraints (conjunctive filter semantics)
+  // None = no predicate on the column; Some(set) = intersection of all
+  // pushed constraints on it (conjunctive filter semantics)
   private var keptLetters: Option[Set[String]] = None
+  private var keptWords: Option[Set[String]] = None
   private var limit: Option[Int] = None
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    def letterSet(f: Filter): Option[Set[String]] = f match {
-      case EqualTo("letter", v: String) => Some(Set(v))
-      case In("letter", vs) if vs.forall(_.isInstanceOf[String]) =>
+    def valueSet(column: String)(f: Filter): Option[Set[String]] = f match {
+      case EqualTo(`column`, v: String) => Some(Set(v))
+      case In(`column`, vs) if vs.forall(_.isInstanceOf[String]) =>
         Some(vs.map(_.asInstanceOf[String]).toSet)
       case _ => None
     }
-    val (handled, residual) = filters.partition(letterSet(_).isDefined)
+    val letterSet = valueSet("letter") _
+    val wordSet   = valueSet("word") _
+    val (handled, residual) =
+      filters.partition(f => letterSet(f).isDefined || wordSet(f).isDefined)
     consumed = handled
     keptLetters = handled.flatMap(letterSet).reduceOption(_ intersect _)
-    // handled filters are FULLY enforced by pruning (a kept file contains
-    // only its own letter), so they don't go back in the residual
+    keptWords = handled.flatMap(wordSet).reduceOption(_ intersect _)
+    // handled filters are FULLY enforced — letters by file pruning (a kept
+    // file contains only its own letter), words by the reader's per-line
+    // comparison — so they don't go back in the residual
     residual
   }
 
   override def pushedFilters(): Array[Filter] = consumed
 
   /** Lines are stored in (df DESC, word ASC) impact order, so a global
-    * LIMIT n is served by the TOP n lines of each kept file — each
+    * LIMIT n is served by the TOP n kept lines of each kept file — each
     * partition stops parsing (and the id split, the expensive part) after
-    * n lines; Spark applies the global limit above. PARTIAL push: Spark
+    * n rows; Spark applies the global limit above. PARTIAL push: Spark
     * keeps its own limit operator (return false), the scan just reads
     * less.
     */
@@ -123,7 +136,8 @@ class LetterIndexScanBuilder(dir: String)
     false // partial: the scan bounds per-partition rows, Spark finishes
   }
 
-  override def build(): Scan = new LetterIndexScan(dir, required, keptLetters, limit)
+  override def build(): Scan =
+    new LetterIndexScan(dir, required, keptLetters, keptWords, limit)
 }
 
 case class LetterFilePartition(letter: String, path: String) extends InputPartition
@@ -132,84 +146,109 @@ class LetterIndexScan(
     dir: String,
     required: StructType,
     kept: Option[Set[String]],
+    words: Option[Set[String]],
     limit: Option[Int] = None)
   extends Scan with Batch {
+
+  // the format's one placement rule: a word's first letter names its file,
+  // so pushed words keep only the letters that begin one of them
+  private val letters: Option[Set[String]] =
+    (kept ++ words.map(_.map(_.take(1)))).reduceOption(_ intersect _)
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String = {
-    val letters = kept.map(_.toSeq.sorted.mkString("{", ",", "}")).getOrElse("*")
-    val lim     = limit.map(n => s", limit=$n").getOrElse("")
-    s"graft-letters $dir, letters=$letters, columns=${required.fieldNames.mkString(",")}$lim"
+    def set(s: Set[String]) = s.toSeq.sorted.mkString("{", ",", "}")
+    val ls  = letters.map(set).getOrElse("*")
+    val ws  = words.map(w => s", words=${set(w)}").getOrElse("")
+    val lim = limit.map(n => s", limit=$n").getOrElse("")
+    s"graft-letters $dir, letters=$ls$ws, columns=${required.fieldNames.mkString(",")}$lim"
   }
 
   override def planInputPartitions(): Array[InputPartition] =
     ('a' to 'z')
       .map(_.toString)
-      .filter(l => kept.forall(_.contains(l)))
+      .filter(l => letters.forall(_.contains(l)))
       .map(l => (l, new java.io.File(dir, s"$l.txt")))
       .collect { case (l, f) if f.isFile => LetterFilePartition(l, f.getPath): InputPartition }
       .toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new LetterIndexReaderFactory(required, limit)
+    new LetterIndexReaderFactory(required, words, limit)
 }
 
-class LetterIndexReaderFactory(required: StructType, limit: Option[Int] = None)
+class LetterIndexReaderFactory(
+    required: StructType,
+    words: Option[Set[String]],
+    limit: Option[Int] = None)
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[LetterFilePartition]
-    new LetterIndexPartitionReader(p.letter, p.path, required, limit)
+    new LetterIndexPartitionReader(p.letter, p.path, required, words, limit)
   }
 }
 
 /** Streams one letter file, parsing `word:[id1 id2 ...]` per line into
   * only the pruned columns — `doc_ids`/`df` skip the id split when
-  * neither is required.
+  * neither is required, and lines whose word is not in `words` skip it
+  * too. Every line, kept or skipped, must pass the format check: a
+  * corrupted file fails the scan instead of answering from the lines
+  * around the damage.
   */
 class LetterIndexPartitionReader(
     letter: String,
     path: String,
     required: StructType,
+    words: Option[Set[String]],
     limit: Option[Int] = None)
   extends PartitionReader[InternalRow] {
 
-  private val needIds =
-    required.fieldNames.contains("doc_ids") || required.fieldNames.contains("df")
+  // output ordinal of each schema column, -1 when pruned
+  private val Array(letterAt, rankAt, wordAt, idsAt, dfAt) =
+    LetterIndexDataSource.Schema.fieldNames.map(required.fieldNames.indexOf(_))
+  private val needIds = idsAt >= 0 || dfAt >= 0
+  private val letterValue = UTF8String.fromString(letter)
   private val reader = new java.io.BufferedReader(new java.io.InputStreamReader(
     new java.io.FileInputStream(path), "UTF-8"))
   private var rank = 0
+  private var emitted = 0
   private var current: InternalRow = _
 
   override def next(): Boolean = {
     // pushed limit: the file is in (df DESC, word ASC) serving order, so
-    // the global top-n is within each file's first n lines — stop parsing
-    // (and the id split) beyond them
-    if (limit.exists(rank >= _)) return false
-    val line = reader.readLine()
-    if (line == null) return false
-    rank += 1
-    val colon = line.indexOf(':')
-    require(colon > 0 && line.length >= colon + 3 &&
-      line.charAt(colon + 1) == '[' && line.endsWith("]"),
-      s"malformed index line in $path: '$line'")
-    val word = line.substring(0, colon)
-    val (ids, df) =
-      if (!needIds) (Array.empty[Long], 0)
-      else {
-        val body = line.substring(colon + 2, line.length - 1)
-        val ids = if (body.isEmpty) Array.empty[Long]
-                  else body.split(' ').map(_.toLong)
-        (ids, ids.length)
+    // the global top-n is within each file's first n kept lines — stop
+    // parsing (and the id split) beyond them
+    if (limit.exists(emitted >= _)) return false
+    var line = reader.readLine()
+    while (line != null) {
+      rank += 1
+      val colon = line.indexOf(':')
+      require(colon > 0 && line.length >= colon + 3 &&
+        line.charAt(colon + 1) == '[' && line.endsWith("]"),
+        s"malformed index line in $path: '$line'")
+      val word = line.substring(0, colon)
+      if (words.forall(_.contains(word))) {
+        current = row(line, colon, word)
+        emitted += 1
+        return true
       }
-    val all = Map[String, Any](
-      "letter"  -> UTF8String.fromString(letter),
-      "rank"    -> rank,
-      "word"    -> UTF8String.fromString(word),
-      "doc_ids" -> ArrayData.toArrayData(ids),
-      "df"      -> df)
-    current = InternalRow.fromSeq(required.fieldNames.map(all(_)).toIndexedSeq)
-    true
+      line = reader.readLine()
+    }
+    false
+  }
+
+  private def row(line: String, colon: Int, word: String): InternalRow = {
+    val values = new Array[Any](required.length)
+    if (letterAt >= 0) values(letterAt) = letterValue
+    if (rankAt >= 0) values(rankAt) = rank
+    if (wordAt >= 0) values(wordAt) = UTF8String.fromString(word)
+    if (needIds) {
+      val body = line.substring(colon + 2, line.length - 1)
+      val ids = if (body.isEmpty) Array.empty[Long] else body.split(' ').map(_.toLong)
+      if (idsAt >= 0) values(idsAt) = ArrayData.toArrayData(ids)
+      if (dfAt >= 0) values(dfAt) = ids.length
+    }
+    new GenericInternalRow(values)
   }
 
   override def get(): InternalRow = current

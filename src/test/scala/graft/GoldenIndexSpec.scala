@@ -9,8 +9,6 @@ import scala.jdk.CollectionConverters._
   */
 class GoldenIndexSpec extends SparkSpec {
 
-  private val refBase = "/root/reference/checker"
-
   private def normalized(dir: String): Map[String, Seq[String]] =
     ('a' to 'z').map { ch =>
       val p = Paths.get(dir, s"$ch.txt")
@@ -23,19 +21,19 @@ class GoldenIndexSpec extends SparkSpec {
 
   private def check(manifest: String, goldenDir: String, tag: String): Unit = {
     val out = Files.createTempDirectory(s"graft-golden-$tag").toString
-    Engine.buildIndex(spark, s"$refBase/$manifest", refBase, out)
+    Engine.buildIndex(spark, RefCorpus(manifest), RefCorpus(), out)
     val got  = normalized(out)
-    val want = normalized(goldenDir)
+    val want = normalized(RefCorpus(goldenDir))
     ('a' to 'z').foreach { ch =>
       assert(got(ch.toString) == want(ch.toString), s"$tag: ${ch}.txt mismatch")
     }
   }
 
   test("small corpus matches golden (27 postings, x.txt empty)") {
-    check("test_small.txt", s"$refBase/test_out_small", "small")
+    check("test_small.txt", "test_out_small", "small")
   }
 
   test("large corpus matches golden (355 docs, 33262 postings)") {
-    check("test.txt", s"$refBase/test_out", "large")
+    check("test.txt", "test_out", "large")
   }
 }

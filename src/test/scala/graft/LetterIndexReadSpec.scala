@@ -7,13 +7,26 @@ import org.apache.spark.sql.functions._
 
 /** [[graft.sources.LetterIndexDataSource]]: the golden letter files read
   * back as a table — content parity with the raw files, letter pruning at
-  * planning time, column pruning at the scan.
+  * planning time, column pruning at the scan. Pruning needs only some
+  * index, so it reads one written from a few in-memory documents.
   */
 class LetterIndexReadSpec extends SparkSpec {
 
-  private val goldenDir = "/root/reference/checker/test_out"
+  private def goldenDir = RefCorpus("test_out")
 
   private def golden = spark.read.format("graft-letters").load(goldenDir)
+
+  // every doc holds "the", "talks" and the q-words; "to"/"town" only the
+  // even ones, so letter t has lines on both sides of df >= 5
+  private lazy val tableIndex = {
+    import spark.implicits._
+    val docs = (1L to 6L).map { id =>
+      (id, s"The quick queen talks ${if (id % 2 == 0) "to the quiet town" else "alone"}")
+    }.toDF("doc_id", "text")
+    val out = Files.createTempDirectory("graft-letters-table").toString
+    graft.sources.LetterSink.writeExact(Engine.indexFromTable(docs), out)
+    spark.read.format("graft-letters").load(out)
+  }
 
   test("reading the reference's own golden output: every line, parsed faithfully") {
     val lineCount = ('a' to 'z').map { ch =>
@@ -39,18 +52,20 @@ class LetterIndexReadSpec extends SparkSpec {
   }
 
   test("letter pushdown prunes files at planning time; residual filters survive") {
-    val one = golden.where(col("letter") === "q")
+    val one = tableIndex.where(col("letter") === "q")
     val plan = one.queryExecution.executedPlan.toString
     assert(plan.contains("letters={q}"), s"scan must advertise the pruned letter set:\n$plan")
-    assert(one.collect().forall(_.getString(0) == "q"))
+    val qs = one.collect()
+    assert(qs.nonEmpty && qs.forall(_.getString(0) == "q"))
     // IN lists intersect with equality (conjunction), empty intersection reads nothing
-    val none = golden.where(col("letter").isin("a", "b") && col("letter") === "c")
+    val none = tableIndex.where(col("letter").isin("a", "b") && col("letter") === "c")
     assert(none.collect().isEmpty)
     assert(none.queryExecution.executedPlan.toString.contains("letters={}"),
       "contradictory letter predicates must prune everything at planning time")
     // non-letter predicates are NOT consumed: df filter still evaluated
-    val hot = golden.where(col("letter") === "t" && col("df") >= 5)
-    assert(hot.collect().forall(r => r.getString(0) == "t" && r.getInt(4) >= 5))
+    val hot = tableIndex.where(col("letter") === "t" && col("df") >= 5).collect()
+    assert(hot.map(_.getString(2)).toSet == Set("the", "talks") &&
+      hot.forall(r => r.getString(0) == "t" && r.getInt(4) >= 5))
   }
 
   test("limit pushdown stops the file parse at the top-n impact-ordered lines") {
@@ -72,8 +87,7 @@ class LetterIndexReadSpec extends SparkSpec {
     assert(wordsOnly.count() == golden.count())
     // roundtrip: engine postings -> writeExact -> DSv2 read == original relation
     val out = Files.createTempDirectory("graft-letters-rt").toString
-    val postings = Engine.indexFromManifest(
-      spark, "/root/reference/checker/test_small.txt", "/root/reference/checker")
+    val postings = Engine.indexFromManifest(spark, RefCorpus("test_small.txt"), RefCorpus())
     graft.sources.LetterSink.writeExact(postings, out)
     val back = spark.read.format("graft-letters").load(out)
       .select(col("word"), col("doc_ids"))

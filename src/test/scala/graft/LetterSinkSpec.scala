@@ -40,9 +40,8 @@ class LetterSinkSpec extends SparkSpec {
     // EQUAL to writeExact's <letter>.txt — same lines, same (df DESC, word
     // ASC) order, same trailing newline; a letter with no postings has no
     // letter= dir and writeExact's file is empty
-    val refBase = "/root/reference/checker"
     for ((manifest, tag) <- Seq("test_small.txt" -> "small", "test.txt" -> "large")) {
-      val postings = Engine.indexFromManifest(spark, s"$refBase/$manifest", refBase)
+      val postings = Engine.indexFromManifest(spark, RefCorpus(manifest), RefCorpus())
       val exactDir = Files.createTempDirectory(s"graft-parity-exact-$tag").toString
       val partDir  = Files.createTempDirectory(s"graft-parity-part-$tag").toString
       LetterSink.writeExact(postings, exactDir)
@@ -75,11 +74,10 @@ class LetterSinkSpec extends SparkSpec {
   }
 
   test("mergePartitioned == mergeExact per letter, snapshots immutable, on both golden corpora") {
-    val refBase = "/root/reference/checker"
     for ((manifest, tag) <- Seq("test_small.txt" -> "small", "test.txt" -> "large")) {
       // base snapshot: the golden corpus index, written exact (the DSv2
       // reader consumes the reference's own a.txt..z.txt format)
-      val postings = Engine.indexFromManifest(spark, s"$refBase/$manifest", refBase)
+      val postings = Engine.indexFromManifest(spark, RefCorpus(manifest), RefCorpus())
       val baseDir = Files.createTempDirectory(s"graft-merge-base-$tag").toString
       LetterSink.writeExact(postings, baseDir)
       val baseSnapshot = ('a' to 'z').map { ch =>

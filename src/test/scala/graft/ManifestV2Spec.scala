@@ -11,8 +11,8 @@ import graft.sources.ManifestSource
   */
 class ManifestV2Spec extends SparkSpec {
 
-  private val manifest = "/root/reference/checker/test.txt"
-  private val baseDir  = "/root/reference/checker"
+  private def manifest = RefCorpus("test.txt")
+  private def baseDir  = RefCorpus()
 
   test("v2 source == v1 docLines assembly on the full reference corpus") {
     val v2 = spark.read.format("graft-manifest").load(manifest)

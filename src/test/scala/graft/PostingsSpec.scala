@@ -29,8 +29,7 @@ class PostingsSpec extends SparkSpec {
   }
 
   test("postings invariants hold on the reference corpus (1-based manifest ids)") {
-    val postings = Engine.indexFromManifest(
-      spark, "/root/reference/checker/test_small.txt", "/root/reference/checker")
+    val postings = Engine.indexFromManifest(spark, RefCorpus("test_small.txt"), RefCorpus())
     val rows = postings.collect()
     val allIds = rows.flatMap(_.getSeq[Long](rows.head.fieldIndex("doc_ids")))
     assert(allIds.min >= 1L && allIds.max <= 3L) // 3 docs, ids 1-based
