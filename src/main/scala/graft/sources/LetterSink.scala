@@ -6,60 +6,69 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Partitioned text sink matching the reference byte-for-byte (O11,
+import graft.operators.InvertedIndex
+
+/** Letter-file sink matching the reference byte-for-byte (O11,
   * reference src/main.cpp:298-320): 26 files `a.txt`…`z.txt`, line format
   * `word:[id1 id2 ... idN]` (no space after ':', ids space-separated,
   * 1-based, ascending), lines ordered df DESC then word ASC, and EMPTY
   * buckets still emit an (empty) file.
   *
-  * Two variants:
-  *  - `writeExact`: driver-side write of the 26 collected buckets — mirrors
-  *    the reference's deliberately sequential final write (README.md:125-133)
-  *    and produces the exact filenames the golden checker diffs. The collect
-  *    is bounded by the index size (postings), not the corpus size; the heavy
-  *    lifting (tokenize/group/sort) stayed distributed.
-  *  - `writePartitioned`: fully distributed `partitionBy("letter")` text write
-  *    for at-scale use, where exact filenames don't matter but parallel IO does.
+  * Both writers share one plan, the reference's per-letter sort
+  * ([[InvertedIndex.rankedWithinLetters]]: a hash exchange on `letter`, then
+  * a sort on (letter, df DESC, word ASC) inside each partition), and differ
+  * only in who writes:
+  *  - `writeExact`: the driver collects the `(letter, line)` rows and writes
+  *    the 26 files — mirrors the reference's deliberately sequential final
+  *    write (README.md:125-133) and produces the exact filenames the golden
+  *    checker diffs. The collect is bounded by the index size, not the
+  *    corpus size.
+  *  - `writePartitioned`: the executors write `letter=*` text dirs in
+  *    parallel, for at-scale use where exact filenames don't matter.
+  *
+  * Each letter is its own file, so no order is needed across letters: there
+  * is no global range sort, whose sampling job would run the upstream
+  * aggregate (or merge join) a second time.
   */
 object LetterSink {
 
-  private def formatted(postings: DataFrame): DataFrame =
-    postings.select(
+  private val Letters = ('a' to 'z').map(_.toString)
+
+  /** `(letter, line)` rows of `postings` in per-letter reference order. */
+  private def ranked(postings: DataFrame): DataFrame =
+    InvertedIndex.rankedWithinLetters(postings).select(
       col("letter"),
-      col("df"),
-      col("word"),
       concat(col("word"), lit(":["), array_join(col("doc_ids"), " "), lit("]")).as("line"))
 
-  /** Driver-side exact sink: returns the 26 output paths. */
+  /** Driver-side exact sink: returns the 26 output paths. A word whose
+    * first letter is outside `a`…`z` has no file, so it raises
+    * IllegalArgumentException before any file is written.
+    */
   def writeExact(postings: DataFrame, outDir: String): Seq[String] = {
-    val out = Paths.get(outDir)
-    Files.createDirectories(out)
-    // One pass: global sort (letter, -df, word) then a single bounded collect.
-    val rows = formatted(postings)
-      .orderBy(asc("letter"), desc("df"), asc("word"))
-      .select("letter", "line")
-      .collect()
-    val byLetter = rows.groupBy(_.getString(0)).view.mapValues(_.map(_.getString(1))).toMap
-    ('a' to 'z').map { ch =>
-      val p = out.resolve(s"$ch.txt")
-      val body = byLetter.get(ch.toString) match {
-        case Some(lines) => lines.mkString("", "\n", "\n")
-        case None        => "" // empty bucket still emits a file (verified: x.txt empty in golden)
-      }
-      Files.write(p, body.getBytes(StandardCharsets.UTF_8))
-      p.toString
+    // a letter lands in one partition and leads the sort, so its lines come
+    // back contiguous and in order; collect keeps partition order
+    val byLetter = ranked(postings).collect()
+      .groupBy(_.getString(0)).view.mapValues(_.map(_.getString(1))).toMap
+    (byLetter.keySet -- Letters).headOption.foreach { bad =>
+      val word = Option(byLetter(bad).head).fold("null")(l => s"'${l.substring(0, l.lastIndexOf(":["))}'")
+      throw new IllegalArgumentException(s"word $word does not start with a letter a-z: no letter file holds it")
+    }
+    val out = Files.createDirectories(Paths.get(outDir))
+    Letters.map { l =>
+      // an empty bucket still emits a file (x.txt is empty in the golden output)
+      val body = byLetter.get(l).fold("")(_.mkString("", "\n", "\n"))
+      Files.write(out.resolve(s"$l.txt"), body.getBytes(StandardCharsets.UTF_8)).toString
     }
   }
 
   /** Incremental maintenance of an ON-DISK letter index: read the existing
     * `a.txt`…`z.txt` snapshot back through the `graft-letters` DSv2 reader,
-    * array-union the delta's postings per word
-    * ([[graft.operators.InvertedIndex.mergeIndexes]]), and write the merged
-    * result to `outDir` as a NEW snapshot — the input dir is never touched
-    * (immutable-snapshot semantics: readers of the old index keep a
-    * consistent view while the merge runs, exactly how an at-scale index
-    * rolls versions). Completes the format's lifecycle: build → write →
-    * read → query → MAINTAIN, all in the reference's own file format.
+    * array-union the delta's postings per word ([[InvertedIndex.mergeIndexes]]),
+    * and write the merged result to `outDir` as a NEW snapshot — the input
+    * dir is never touched (immutable-snapshot semantics: readers of the old
+    * index keep a consistent view while the merge runs, exactly how an
+    * at-scale index rolls versions). Completes the format's lifecycle:
+    * build → write → read → query → MAINTAIN, in the reference's own format.
     *
     * Returns the 26 output paths.
     */
@@ -70,43 +79,31 @@ object LetterSink {
       outDir: String): Seq[String] = {
     val existing = spark.read.format("graft-letters").load(indexDir)
       .select(col("word"), col("doc_ids"))
-    writeExact(graft.operators.InvertedIndex.mergeIndexes(existing, delta), outDir)
+    writeExact(InvertedIndex.mergeIndexes(existing, delta), outDir)
   }
 
   /** Distributed sink: dir-per-letter text write (`letter=a/part-*.txt`).
     *
-    * The in-partition sort leads with `letter` deliberately: the dynamic
+    * The per-letter sort leads with `letter` deliberately: the dynamic
     * partitioned write requires rows clustered by the partition column,
     * and when the child ordering doesn't already provide that, the
     * planner inserts its OWN sort on `letter` alone — which is not
     * guaranteed stable, so the (df DESC, word ASC) line order inside
-    * each letter could be scrambled. Leading with `letter` satisfies the
-    * write requirement up front, no extra sort is planned, and each
-    * letter's file carries the exact reference line order — pinned
-    * byte-equal to [[writeExact]] on both golden corpora by
-    * LetterSinkSpec's parity test.
+    * each letter could be scrambled. With `letter` leading, no extra sort
+    * is planned, and each letter's file carries the exact reference line
+    * order — pinned byte-equal to [[writeExact]] by LetterSinkSpec.
     */
   def writePartitioned(postings: DataFrame, outDir: String): Unit =
-    formatted(postings)
-      .repartition(26, col("letter"))
-      .sortWithinPartitions(asc("letter"), desc("df"), asc("word"))
-      .select("letter", "line")
-      .write
-      .mode("overwrite")
-      .partitionBy("letter")
-      .text(outDir)
+    ranked(postings).write.mode("overwrite").partitionBy("letter").text(outDir)
 
-  /** Distributed twin of [[mergeExact]] (r13 task 6): the same
-    * immutable-snapshot merge — read the existing `a.txt`…`z.txt`
-    * snapshot through the DSv2 reader, array-union the delta per word,
-    * write a NEW snapshot — but through [[writePartitioned]]'s parallel
-    * letter-partitioned sink instead of the driver-side exact files.
-    * The input dir is never touched, so readers of the old snapshot keep
-    * a consistent view while the merge runs; at 100 TB this is the shape
-    * an index roll actually takes (distributed read → one word-keyed
-    * full-outer join shuffle → distributed partitioned write; nothing
-    * index-sized ever visits the driver). Per-letter content is pinned
-    * byte-equal to [[mergeExact]] on both golden corpora by
+  /** Distributed twin of [[mergeExact]]: the same immutable-snapshot merge,
+    * written through [[writePartitioned]]'s parallel letter-partitioned sink
+    * instead of the driver-side exact files. The input dir is never
+    * touched, so readers of the old snapshot keep a consistent view while
+    * the merge runs; at 100 TB this is the shape an index roll actually
+    * takes (distributed read → one word-keyed full-outer join shuffle →
+    * distributed partitioned write; nothing index-sized ever visits the
+    * driver). Per-letter content is pinned byte-equal to [[mergeExact]] by
     * LetterSinkSpec.
     */
   def mergePartitioned(
@@ -116,6 +113,6 @@ object LetterSink {
       outDir: String): Unit = {
     val existing = spark.read.format("graft-letters").load(indexDir)
       .select(col("word"), col("doc_ids"))
-    writePartitioned(graft.operators.InvertedIndex.mergeIndexes(existing, delta), outDir)
+    writePartitioned(InvertedIndex.mergeIndexes(existing, delta), outDir)
   }
 }

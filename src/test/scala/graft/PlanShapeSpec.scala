@@ -1,14 +1,23 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.operators.{InvertedIndex, Tokenize}
+import graft.sources.LetterSink
 
 /** Pins the SHAPE of the hot plans, not just their results: shuffle count is
   * the thing that decides whether a pipeline survives a 100x scale-up, so a
   * regression that slips in an extra exchange should fail loudly here.
   */
-class PlanShapeSpec extends SparkSpec {
+class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** Count SHUFFLE exchanges only — BroadcastExchange moves a small table to
     * every executor once and is exactly what we want joins to do.
@@ -28,6 +37,50 @@ class PlanShapeSpec extends SparkSpec {
     val ranked = InvertedIndex.rankedWithinLetters(Engine.indexFromTable(docs))
     assert(exchanges(ranked) == 2,
       s"ranked index should shuffle twice:\n${ranked.queryExecution.executedPlan}")
+  }
+
+  /** Executed plans of the `collect`s that `body` runs, as a
+    * QueryExecutionListener sees them (listener events arrive
+    * asynchronously, so wait for at least one).
+    */
+  private def collectedPlans(body: => Unit): Seq[SparkPlan] = {
+    val seen = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "collect") seen.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(!seen.isEmpty, "no collect reached the listener")
+    seen.asScala.toSeq
+  }
+
+  test("writeExact collects the per-letter plan: word aggregate + letter exchange, no range sort") {
+    val plans = collectedPlans(
+      LetterSink.writeExact(Engine.indexFromTable(docs), java.nio.file.Files.createTempDirectory("graft-plan").toString))
+    assert(plans.size == 1, s"writeExact should collect once, got ${plans.size}")
+    val plan = plans.head
+    assert(!plan.toString.contains("rangepartitioning"), s"global range sort in:\n$plan")
+    // walks into AQE query stages: the final plan's exchanges, not its text
+    val shuffles = collect(plan) { case e: ShuffleExchangeLike => e.simpleString(100) }
+    assert(shuffles.size == 2 &&
+        shuffles.exists(_.startsWith("Exchange hashpartitioning(word#")) &&
+        shuffles.exists(_.startsWith("Exchange hashpartitioning(letter#")),
+      s"expected exactly the word and letter exchanges, got ${shuffles.mkString("; ")}:\n$plan")
+  }
+
+  test("mergeExact collects without a global range sort") {
+    val base = java.nio.file.Files.createTempDirectory("graft-plan-base").toString
+    LetterSink.writeExact(Engine.indexFromTable(docs.where(col("doc_id") % 2 === 0)), base)
+    val delta = Engine.indexFromTable(docs.where(col("doc_id") % 2 =!= 0))
+    val plans = collectedPlans(
+      LetterSink.mergeExact(spark, base, delta, java.nio.file.Files.createTempDirectory("graft-plan-merge").toString))
+    plans.foreach(p => assert(!p.toString.contains("rangepartitioning"), s"global range sort in:\n$p"))
   }
 
   test("tokenize + quality metrics are shuffle-free (pure map-side)") {
